@@ -22,13 +22,7 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val docs = Tables.documents(spark, sfDir)
-    val tf = graft.tfidf.TfIdf.tfidf(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = Semantic.relatedTermsFrom(tf, Semantic.queryTermFrom(tf), k = 20)
-      .localCheckpoint(true)
-    tf.unpersist(false)
-    out
+    Semantic.relatedToTopTerm(Tables.documents(spark, sfDir), k = 20)
   }
 
   private def modules: Seq[QueryModule] = Seq(

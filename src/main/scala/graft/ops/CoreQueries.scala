@@ -35,15 +35,7 @@ object CoreQueries extends graft.QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_related_terms" -> { (spark, dir) =>
-      val docs = Tables.documents(spark, dir)
-      // tf persisted across the three passes (query-term derivation,
-      // norm, aggregation), dropped once the k-row result materializes
-      val tf = TfIdf.tfidf(docs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val out = Semantic.relatedTermsFrom(tf, Semantic.queryTermFrom(tf), k = 20)
-        .localCheckpoint(true)
-      tf.unpersist(false)
-      out
+      Semantic.relatedToTopTerm(Tables.documents(spark, dir), k = 20)
     },
     "q_tfidf_topk" -> { (spark, dir) =>
       val docs = Tables.documents(spark, dir)

@@ -1,6 +1,8 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.types._
@@ -17,12 +19,17 @@ import graft.tfidf.TfIdf
   * broadcast could exceed limits, so the join strategy is a parameter —
   * `broadcastQuery = false` falls back to a shuffled left join.
   *
-  * The algorithm needs three passes over the TF-IDF table (query-term
-  * derivation when auto, query-norm scalar, candidate aggregation), so
-  * [[relatedTerms]] persists it once instead of recomputing the
-  * tokenize→count→window chain per pass — the 100 TB analogue is
-  * checkpointing the tf-idf table, which a multi-query service would
-  * share across requests anyway.
+  * A per-query driver value enters a plan as data, never as a literal:
+  * codegen writes numeric literals into the generated Java source, so a
+  * literal query norm would compile fresh classes for every new query
+  * term, while a column keeps the generated code identical across terms.
+  *
+  * The algorithm needs two passes over the TF-IDF table (the query
+  * vector, then the candidate aggregation; a third when the query term
+  * is derived from the data), so [[relatedTerms]] persists it once
+  * instead of recomputing the tokenize→count→window chain per pass — the
+  * 100 TB analogue is checkpointing the tf-idf table, which a
+  * multi-query service would share across requests anyway.
   */
 object Semantic {
 
@@ -32,10 +39,12 @@ object Semantic {
   /** Deterministic data-derived query term: highest document frequency,
     * ties broken by lexicographically smallest term. Keeps declared
     * queries hash-stable across scale factors (SURVEY.md §7.4.6) —
-    * the DuckDB oracle derives the same term with the same rule.
+    * the DuckDB oracle derives the same term with the same rule. `df`
+    * is a function of `term`, so the table's repeated (term, df) rows
+    * cannot change the answer and need no `distinct()` shuffle.
     */
   def queryTermFrom(tf: DataFrame): String =
-    tf.select(col("term"), col("df")).distinct()
+    tf.select(col("term"), col("df"))
       .orderBy(col("df").desc, col("term"))
       .limit(1)
       .collect()
@@ -58,10 +67,18 @@ object Semantic {
       k: Int = 5,
       termPred: Option[Column] = None,
       broadcastQuery: Boolean = true,
-      roundDigits: Int = 9): DataFrame = {
+      roundDigits: Int = 9): DataFrame =
+    onPersistedTfIdf(docs)(relatedTermsFrom(_, query, k, termPred, broadcastQuery, roundDigits))
+
+  /** The reference's one query with its term derived from the data: the
+    * top-k terms most similar to [[queryTermFrom]], materialized like
+    * [[relatedTerms]]. */
+  def relatedToTopTerm(docs: DataFrame, k: Int): DataFrame =
+    onPersistedTfIdf(docs)(tf => relatedTermsFrom(tf, queryTermFrom(tf), k))
+
+  private def onPersistedTfIdf(docs: DataFrame)(query: DataFrame => DataFrame): DataFrame = {
     val tf = TfIdf.tfidf(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    val out = relatedTermsFrom(tf, query, k, termPred, broadcastQuery, roundDigits)
-      .localCheckpoint(true)
+    val out = query(tf).localCheckpoint(true)
     tf.unpersist(false)
     out
   }
@@ -87,24 +104,43 @@ object Semantic {
       roundDigits: Int = 9): DataFrame = {
     val spark = tf.sparkSession
     val qvec = tf.filter(col("term") === lit(query)).select(col("doc_id"), col("tfidf").as("v1"))
-    // ‖query‖₂ — a one-row aggregate, the only scalar the driver sees.
-    val den1 = qvec.agg(sqrt(sum(col("v1") * col("v1")))).collect().headOption
-      .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Double]))
-      .getOrElse(0.0)
+    val den1Field = StructField("den1", DoubleType, nullable = false)
+    // q = (doc_id, v1, den1): ‖query‖₂ rides along as a column
+    val (q, den1) =
+      if (broadcastQuery) {
+        // one job reads the vector the broadcast would hold on the driver
+        // anyway; the norm sums it in row order, and the broadcast side
+        // is built from these rows with no second scan of the table
+        val rows = qvec.collect()
+        val den1 = math.sqrt(rows.foldLeft(0.0) { (s, r) => val v = r.getDouble(1); s + v * v })
+        val local = spark.createDataFrame(
+          rows.toSeq.map(r => Row(r.get(0), r.get(1), den1)).asJava,
+          StructType(qvec.schema.fields :+ den1Field))
+        (broadcast(local), den1)
+      } else {
+        // the vector stays distributed; only its norm reaches the driver
+        val den1 = qvec.agg(sqrt(sum(col("v1") * col("v1")))).collect().headOption
+          .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Double]))
+          .getOrElse(0.0)
+        val norm = spark.createDataFrame(java.util.List.of(Row(den1)), StructType(Seq(den1Field)))
+        (qvec.crossJoin(broadcast(norm)), den1)
+      }
     if (den1 == 0.0)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outputSchema)
+      return spark.createDataFrame(java.util.Collections.emptyList[Row], outputSchema)
 
     val candidates0 = tf.filter(col("term") =!= lit(query))
     val candidates = termPred.fold(candidates0)(candidates0.filter)
-    val q = if (broadcastQuery) broadcast(qvec) else qvec
 
     candidates
       .join(q, Seq("doc_id"), "left")
-      .select(col("term"), coalesce(col("v1"), lit(0.0)).as("v1"), col("tfidf"))
+      .select(col("term"), coalesce(col("v1"), lit(0.0)).as("v1"), col("tfidf"), col("den1"))
       .groupBy("term")
       .agg(
         sum(col("v1") * col("tfidf")).as("num"),
-        sum(col("tfidf") * col("tfidf")).as("den2"))
+        sum(col("tfidf") * col("tfidf")).as("den2"),
+        // null only for rows no query document matched; a group with
+        // num != 0 has a matched row, so its den1 is the query norm
+        max(col("den1")).as("den1"))
       .filter(col("num") =!= 0.0)
       .select(
         col("term"), {
@@ -112,7 +148,7 @@ object Semantic {
           // declared queries round for Spark-vs-oracle sum-order noise.
           // Two-step division mirrors the reference's arithmetic order
           // (app.py:110 then :178) bit-for-bit.
-          val s = (col("num") / sqrt(col("den2"))) / lit(den1)
+          val s = (col("num") / sqrt(col("den2"))) / col("den1")
           (if (roundDigits >= 0) round(s, roundDigits) else s).as("sim")
         })
       .orderBy(col("sim").desc, col("term"))

@@ -47,6 +47,18 @@ class GoldenFixtureSpec extends AnyFunSuite {
     assert(math.abs(got(0)._2 - 0.34299717028501764) < 1e-8)
   }
 
+  test("golden: raw doubles equal the reference's exactly on both join paths (FIXTURES A.2)") {
+    // roundDigits = -1 is the CLI's unrounded output; `==` pins the
+    // summation order of the query norm, whichever side computes it
+    for (b <- Seq(true, false)) {
+      val got = Semantic.relatedTerms(golden, "gene_egfr_gene", k = 5,
+          termPred = Some(Semantic.geneTermPredicate), broadcastQuery = b, roundDigits = -1)
+        .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+      assert(got == Seq("gene_tp53_gene" -> 0.7096661947545744,
+        "gene_kras_gene" -> 0.34299717028501764), s"broadcastQuery=$b")
+    }
+  }
+
   test("golden: nonexistent query term → empty result, no error") {
     assert(related("gene_nonexistent_gene").isEmpty)
   }
